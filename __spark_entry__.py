@@ -24,12 +24,13 @@ containing queries remain the primary evidence.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_stream_processing_refarch_spark.operators import bpe as bpe_ops  # noqa: E402
 from flink_stream_processing_refarch_spark.operators import contamination as contam_ops  # noqa: E402
@@ -85,11 +86,12 @@ PRIORITY = [
     # r14 #3 ordered in, then oldest r11): post-r15 min last-green
     # outside the window is r11. Results of every entry are UNCHANGED
     # and re-proven against the oracle at sf0.01+sf0.001 before commit
-    # (OPTIMIZATION_r15.md). The streaming entries touched only by the
-    # post-termination progress-capture hook (jobs.LAST_RUN_PROGRESS)
-    # are NOT in the changed set: the hook runs after the replay
-    # finishes and cannot alter plan or result; the full-registry
-    # selfcheck re-proves them at both SFs regardless. ----
+    # (OPTIMIZATION_r15.md). The streaming entries touched only by
+    # r15's post-termination progress-capture hook (since removed: the
+    # perfbench trace reads the same durationMs parts through a
+    # listener) are NOT in the changed set: the hook ran after the
+    # replay finished and could not alter plan or result; the
+    # full-registry selfcheck re-proves them at both SFs regardless. ----
     "minhash_signatures",
     "ngram_jaccard",
     "corpus_build",

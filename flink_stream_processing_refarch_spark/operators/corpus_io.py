@@ -646,10 +646,11 @@ def get_corpus_retention(out_dir: str) -> int:
         return 0
 
 
-def _token_time_ns(token: str) -> int:
-    """Commit order proxy embedded in every token ('{pid}-{time_ns}').
-    Unparseable tokens sort OLDEST (0) so expiry treats them as past
-    any horizon rather than retaining them forever."""
+def _expiry_time_ns(token: str) -> int:
+    """Commit order proxy embedded in every token ('{pid}-{time_ns}')
+    for version expiry. Unparseable tokens sort OLDEST (0) so expiry
+    treats them as past any horizon rather than retaining them forever
+    (unlike :func:`_token_time_ns`, which reports them as unknown)."""
     try:
         return int(token.rsplit("-", 1)[1])
     except (IndexError, ValueError):
@@ -2729,7 +2730,7 @@ def expire_corpus_versions(
             except (FileNotFoundError, json.JSONDecodeError, OSError):
                 log = []
             if len(log) >= keep:
-                horizon_ns = _token_time_ns(log[-keep])
+                horizon_ns = _expiry_time_ns(log[-keep])
             else:
                 horizon_ns = 0  # fewer commits than K: keep everything
         expired, kept = [], []
@@ -2738,7 +2739,7 @@ def expire_corpus_versions(
         for name in sorted(os.listdir(out_dir)):
             if not name.startswith(RETIRED_PREFIX):
                 continue
-            t_ns = _token_time_ns(name[len(RETIRED_PREFIX):])
+            t_ns = _expiry_time_ns(name[len(RETIRED_PREFIX):])
             if purge_all or not keep or t_ns < horizon_ns:
                 _shutil.rmtree(
                     os.path.join(out_dir, name), ignore_errors=True

@@ -236,15 +236,38 @@ def _band_expr(dialect: str, b: int) -> str:
     return f"md5(concat(mh{2 * b}, mh{2 * b + 1}))"
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = corpus_df(spark, sf_dir)
+def with_minhash(df: DataFrame) -> DataFrame:
+    """Append the mh0..mh{k-1} minhash columns of ``text``."""
     # words projected ONCE as a column (see _shingles docstring)
-    c = c.withColumn("__ws", F.expr(words_expr("text", "spark")))
-    c = c.withColumn("__shingles", F.expr(_shingles("spark", ws="__ws")))
-    c = c.withColumn("__sh_md5", F.expr(_sh_md5("spark")))
+    df = df.withColumn("__ws", F.expr(words_expr("text", "spark")))
+    df = df.withColumn("__shingles", F.expr(_shingles("spark", ws="__ws")))
+    df = df.withColumn("__sh_md5", F.expr(_sh_md5("spark")))
     for j, e in enumerate(_minhash_cols("spark")):
-        c = c.withColumn(f"mh{j}", F.expr(e))
-    return c.drop("__ws", "__shingles", "__sh_md5", "text")
+        df = df.withColumn(f"mh{j}", F.expr(e))
+    return df.drop("__ws", "__shingles", "__sh_md5")
+
+
+def band_rows(sigs: DataFrame, id_alias: str = "doc_id") -> DataFrame:
+    """Explode a signature frame into (id, band, bh) rows, one per LSH
+    band."""
+    return sigs.select(
+        F.col("doc_id").alias(id_alias),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.expr(_band_expr("spark", b)).alias("bh"),
+                    )
+                    for b in range(N_BANDS)
+                ]
+            )
+        ).alias("e"),
+    ).select(id_alias, "e.band", "e.bh")
+
+
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return with_minhash(corpus_df(spark, sf_dir)).drop("text")
 
 
 def _signatures_sql(dialect: str) -> str:
@@ -302,22 +325,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing benefit without the in-memory cache cost.
     """
     sigs = minhash_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(_band_expr("spark", b)).alias("bh"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bh")
     bkt = (
-        bands.groupBy("band", "bh")
+        band_rows(sigs)
+        .groupBy("band", "bh")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= LSH_BUCKET_CAP))
     )

@@ -53,11 +53,12 @@ from ..schemas import load_table, spread
 from .dedup import (
     LSH_BUCKET_CAP,
     N_BANDS,
-    N_HASHES,
     _band_expr,
     _minhash_cols,
     _sh_md5,
     _shingles,
+    band_rows,
+    with_minhash,
 )
 
 
@@ -81,37 +82,6 @@ def _parts_sql(dialect: str) -> tuple[str, str]:
         " FROM documents WHERE doc_id % 20 = 0"
     )
     return base, delta
-
-
-def _with_sigs(df: DataFrame) -> DataFrame:
-    """Append mh0..mh{k-1} minhash columns (shared helpers from dedup.py)."""
-    from ..functions.portable import words_expr
-
-    # words projected once as a column (see dedup._shingles, r14)
-    df = df.withColumn("__ws", F.expr(words_expr("text", "spark")))
-    df = df.withColumn("__shingles", F.expr(_shingles("spark", ws="__ws")))
-    df = df.withColumn("__sh_md5", F.expr(_sh_md5("spark")))
-    for j, e in enumerate(_minhash_cols("spark")):
-        df = df.withColumn(f"mh{j}", F.expr(e))
-    return df.drop("__ws", "__shingles", "__sh_md5")
-
-
-def _band_rows(df: DataFrame, id_alias: str) -> DataFrame:
-    """Explode a signature frame into (id, band, bh) rows."""
-    return df.select(
-        F.col("doc_id").alias(id_alias),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(_band_expr("spark", b)).alias("bh"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_alias, "e.band", "e.bh")
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,13 +108,13 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus band-bucket index (production: a maintained table) with the
     # standing degenerate-bucket cap; delta survivors probe it
     base_bkt = (
-        _band_rows(_with_sigs(base), "base_id")
+        band_rows(with_minhash(base), "base_id")
         .groupBy("band", "bh")
         .agg(F.sort_array(F.collect_list("base_id")).alias("ids"))
         .filter(F.size("ids") <= LSH_BUCKET_CAP)
     )
     cand = (
-        _band_rows(_with_sigs(surv), "delta_id")
+        band_rows(with_minhash(surv), "delta_id")
         .join(base_bkt, ["band", "bh"])
         .select("delta_id", F.explode("ids").alias("base_id"))
         .distinct()

@@ -25,6 +25,8 @@ top-N is ``orderBy().limit(n)`` (Spark's TakeOrdered — no full sort).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1187,7 +1189,8 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata on read by default) but it is a local, single-bucket sort —
     no exchange, pipelined with the scan.
     """
-    wh = "/root/repo/spark-warehouse"
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    wh = os.path.join(root, "spark-warehouse")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )

@@ -247,18 +247,13 @@ def _scan_splits_estimate(spark, src_path: str) -> int:
 #: layout to the DATA, not to defaultParallelism: at sf0.1 (~2 MB) this
 #: yields ~8 files, enough parallel splits for the CPU-bound headline map
 #: work while trivial scans stop paying a 32-task scheduling floor per
-#: stage (the r04 regression cluster: time_rollup & co. 2-3x). Override
-#: via SPARK_GRAFT_NORM_EVENTS_FILES for tuning experiments.
+#: stage (the r04 regression cluster: time_rollup & co. 2-3x).
 NORM_EVENTS_BYTES_PER_FILE = 256 * 1024
 
 
 def _norm_events_file_count(src_bytes: int, par: int) -> int:
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_NORM_EVENTS_FILES", "")
-    if env.strip():
-        return max(1, int(env))
     if src_bytes < 0:
         return par
     return max(2, min(par, math.ceil(src_bytes / NORM_EVENTS_BYTES_PER_FILE)))
@@ -468,8 +463,8 @@ def normalized_events_path(spark, sf_dir: str) -> str | None:
     events scan pay a 32-task scheduling floor per stage (time_rollup &
     co. regressed 2-3x) and even slowed the CPU-heavy headline; the
     8-file layout at sf0.1 was the measured optimum for BOTH (headline
-    1.44 -> 1.13 s, cheap scans back to their pre-materialization walls
-    — tools/tune_norm_files.py is the harness).
+    1.44 -> 1.13 s, cheap scans back to their pre-materialization walls;
+    measured by a file-count grid, README round 5).
 
     GATED like :func:`spread`: only the starved-scan local case (source
     splits < cores — the single-row-group testdata files, which Spark

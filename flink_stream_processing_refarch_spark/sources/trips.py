@@ -29,7 +29,7 @@ from ..functions import geo
 from ..functions.geo import dlit, geohash_center_py
 
 # Dialect tokens. ``ts_ms``: epoch-ms of the events.ts column — on the
-# Spark side :func:`derive_trips` materializes it ONCE as a real column
+# Spark side :func:`trips_from_events` materializes it ONCE as a real column
 # in the narrow pre-spread projection (load_table/normalize_event_ts
 # presents ``ts`` as BIGINT epoch-nanos whatever the parquet's physical
 # layout), so the big trip projection references a plain attribute
@@ -161,18 +161,25 @@ def trips_cte_sql() -> str:
     return f"SELECT\n  {cols}\nFROM events"
 
 
+def trips_from_events(ev: DataFrame) -> DataFrame:
+    """The trip projection (same arithmetic as :func:`trips_cte_sql`)
+    over any events relation with (event_id, ts BIGINT epoch-nanos),
+    batch or streaming. ``ts_ms`` is materialized once before the wide
+    projection (see :data:`DIALECTS`)."""
+    return ev.select(
+        "event_id", F.expr("ts DIV 1000000").alias("ts_ms")
+    ).select(*[F.expr(expr).alias(name) for name, expr in trip_exprs("spark")])
+
+
 def derive_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-side trips derivation (same arithmetic as :func:`trips_cte_sql`).
+    """Spark-side trips derivation over the events table.
 
     Deliberately NO starved-scan repartition here (unlike the documents
     loaders): the trip projection is cheap enough per row that at the
     local single-task-scan sizes the extra exchange + AQE stage costs
     more wall (+0.2-0.4 s/query measured) than the serialization it
     removes; at cluster scale the scan has >= cores splits anyway."""
-    events = load_events(spark, sf_dir)
-    return events.select(
-        "event_id", F.expr("ts DIV 1000000").alias("ts_ms")
-    ).select(*[F.expr(expr).alias(name) for name, expr in trip_exprs("spark")])
+    return trips_from_events(load_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -191,6 +198,27 @@ def clean_trip_filter_sql() -> str:
     )
 
 
+def with_event_time(trips: DataFrame, watermark_delay: str = "0 seconds") -> DataFrame:
+    """Attach the event-time column ``dropoff_ts`` (from ``dropoff_ms``)
+    and its watermark. Every Q1/Q2 window is taken over ``dropoff_ts``;
+    on a batch relation the watermark is a no-op that the analyzer
+    drops."""
+    return trips.withColumn(
+        "dropoff_ts", F.timestamp_millis(F.col("dropoff_ms"))
+    ).withWatermark("dropoff_ts", watermark_delay)
+
+
+def clean_trips_from_events(ev: DataFrame) -> DataFrame:
+    """Trip projection + P1-P4 filter chain + event time over any events
+    relation, batch or streaming — the one derivation both
+    :func:`clean_trips` and the streaming sources run. The watermark is
+    attached AFTER filtering, so it tracks the cleaned stream (where the
+    reference assigns timestamps)."""
+    return with_event_time(
+        trips_from_events(ev).filter(F.expr(clean_trip_filter_sql()))
+    )
+
+
 def clean_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived trips with the reference's filter chain applied.
 
@@ -198,4 +226,4 @@ def clean_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     them into the parquet scan; at cluster scale this is a full-scan filter
     with no shuffle.
     """
-    return derive_trips(spark, sf_dir).filter(F.expr(clean_trip_filter_sql()))
+    return clean_trips_from_events(load_events(spark, sf_dir))

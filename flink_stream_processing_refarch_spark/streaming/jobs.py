@@ -11,12 +11,16 @@ for the streaming variant is therefore the batch SQL restricted to
 ``window_end <= max(event_time)`` — an exact, checkable statement of
 Spark's emission rule.
 
+The Q1/Q2 rules themselves live once in ``plans/taxi.py`` and run here
+unchanged over streaming trips.
+
 Architecture parity notes:
   - The shared ``trips`` sub-stream feeding both queries
-    (ProcessTaxiStream.java:87,96,109 — a DAG fan-out Flink shares but two
-    Spark ``writeStream``s would recompute) is handled the idiomatic Spark
-    way: ONE query with ``foreachBatch`` computing both aggregates from a
-    cached micro-batch (``run_taxi_pipeline``).
+    (ProcessTaxiStream.java:87,96,109 — a DAG fan-out Flink shares) runs
+    as TWO streaming queries in ``run_taxi_pipeline`` (each owns its
+    window state; the source is scanned twice), and as ONE scan in
+    ``run_taxi_pipeline_single_pass`` (per-batch partial aggregates from
+    a cached micro-batch, merged at the end).
   - RocksDB state store (ProcessTaxiStream.java:145) maps to
     ``spark.sql.streaming.stateStore.providerClass`` = RocksDBStateStoreProvider.
   - Source throttling (SHARD_GETRECORDS_MAX, :76-77) maps to
@@ -33,10 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import geo
-from ..functions.timeutils import duration_min_sql
-from ..plans.taxi import MIN_PICKUP_COUNT
-from ..sources.trips import clean_trip_filter_sql, trip_exprs
+from ..plans import taxi
+from ..sources.trips import (
+    clean_trip_filter_sql,
+    clean_trips_from_events,
+    with_event_time,
+)
 
 # Normalized events schema: what stream_events/load_table emit after the
 # ts shim (BIGINT epoch-nanos), whatever the parquet's physical layout.
@@ -53,15 +59,6 @@ EVENTS_SCHEMA = T.StructType(
 
 
 _EVENTS_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-
-#: Per-batch progress of the most recent ``_run_to_memory`` replay
-#: (r15 profiling hook, VERDICT r14 #4): raw StreamingQueryProgress
-#: dicts, one per micro-batch, read by tools/profile_stream_scaffold.py
-#: to break the per-batch fixed cost into durationMs components
-#: (addBatch / walCommit / commitOffsets / getBatch / latestOffset /
-#: queryPlanning / stateStore commit times). Capturing them is a few
-#: dict handles per replay — no measurable cost in the timed path.
-LAST_RUN_PROGRESS: list = []
 
 
 def _events_schema(spark: SparkSession, src: str) -> T.StructType:
@@ -216,74 +213,15 @@ def wire_trips(ev: DataFrame, watermark_delay: str = "0 seconds") -> DataFrame:
     trips = ev.withColumn(
         "pickup_ms", F.unix_millis("pickup_datetime")
     ).withColumn("dropoff_ms", F.unix_millis("dropoff_datetime"))
-    trips = trips.filter(F.expr(clean_trip_filter_sql()))
-    return trips.withColumn(
-        "dropoff_ts", F.timestamp_millis(F.col("dropoff_ms"))
-    ).withWatermark("dropoff_ts", watermark_delay)
-
-
-def q1_agg_from_trips(
-    trips: DataFrame, min_count: int | None = MIN_PICKUP_COUNT
-) -> DataFrame:
-    """Q1 windowed aggregation over a (cleaned, watermarked) trip stream:
-    pickup counts per geohash6 per 10-min window, HAVING count >=
-    ``min_count`` (2, ProcessTaxiStream.java:96-107). Shared by every
-    Q1 surface — the oracle-checked streaming query, the wire-ingest
-    path, the pipeline, AND the trending-cells leaderboard
-    (``min_count=None``: quiet windows still rank) — so all agree on
-    one window/timestamp/geohash derivation."""
-    trips = geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    counts = trips.groupBy(
-        F.window("dropoff_ts", "10 minutes"), "location"
-    ).agg(F.count("*").alias("pickup_count"))
-    if min_count is not None:
-        counts = counts.filter(F.col("pickup_count") >= min_count)
-    return counts.select(
-        "location",
-        "pickup_count",
-        (F.unix_millis("window.end") - 1).alias("timestamp"),
-    )
-
-
-def q2_agg_from_trips(trips: DataFrame) -> DataFrame:
-    """Q2 windowed aggregation: airport classification (JFK precedence),
-    floored-minute durations, sum+avg per (geohash6, airport, window),
-    HAVING count > 1 (ProcessTaxiStream.java:109-136)."""
-    trips = trips.withColumn(
-        "airport_code",
-        F.when(geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")).when(
-            geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")
-        ),
-    ).filter(F.col("airport_code").isNotNull())
-    trips = geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    trips = trips.withColumn(
-        "duration_min", F.expr(duration_min_sql("dropoff_ms", "pickup_ms", "spark"))
-    )
-    return (
-        trips.groupBy(
-            F.window("dropoff_ts", "10 minutes"), "location", "airport_code"
-        )
-        .agg(
-            F.sum("duration_min").alias("sum_trip_duration"),
-            F.count("*").alias("cnt"),
-        )
-        .filter(F.col("cnt") > 1)
-        .select(
-            "location",
-            "airport_code",
-            "sum_trip_duration",
-            (F.col("sum_trip_duration").cast("double") / F.col("cnt")).alias(
-                "avg_trip_duration"
-            ),
-            (F.unix_millis("window.end") - 1).alias("timestamp"),
-        )
+    return with_event_time(
+        trips.filter(F.expr(clean_trip_filter_sql())), watermark_delay
     )
 
 
 def q1_from_wire(spark: SparkSession, json_dir: str, **source_opts) -> DataFrame:
     """Streaming Q1 over the JSON wire stream (bounded run to memory)."""
     trips = stream_trips_from_wire(spark, json_dir, **source_opts)
-    return _run_to_memory(q1_agg_from_trips(trips))
+    return _run_to_memory(taxi.q1(trips))
 
 
 def pump_wire_to_kinesis(
@@ -335,7 +273,7 @@ def q1_kinesis_wire(
     into the fake stream as PutRecords epochs -> ``kinesis_reader`` +
     ``parse_wire_bytes`` consume the record contract
     (ProcessTaxiStream.java:73-87) -> the SAME ``wire_trips`` +
-    ``q1_agg_from_trips`` chain as every other Q1 surface. Emission rule
+    ``taxi.q1`` chain as every other Q1 surface. Emission rule
     and result contract identical to ``q1_streaming`` -> same oracle.
 
     Everything here is the production plumbing except the transport
@@ -393,47 +331,25 @@ def q1_kinesis_wire(
             spark, "taxi-trips", "local", endpoint=endpoint
         ).load()
         trips = wire_trips(parse_wire_bytes(records))
-        return _run_to_memory(q1_agg_from_trips(trips))
+        return _run_to_memory(taxi.q1(trips))
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def clean_trips_from_event_stream(ev: DataFrame) -> DataFrame:
-    """Trip derivation + P1-P4 filter chain + event-time watermark over
-    any streaming events relation with (event_id, ts BIGINT nanos)
-    columns — the source-agnostic half of ``stream_clean_trips``, so
-    alternate sources (the sf1 scale harness's replica files, a Kinesis
-    swap) run the IDENTICAL registry plan."""
-    # ts_ms is materialized once before the wide trip projection (same
-    # contract as sources.trips.derive_trips — the 'ts_ms' dialect token
-    # is a plain column reference, which keeps the Catalyst tree small).
-    trips = (
-        ev.select("event_id", F.expr("ts DIV 1000000").alias("ts_ms"))
-        .select(*[F.expr(e).alias(name) for name, e in trip_exprs("spark")])
-        .filter(F.expr(clean_trip_filter_sql()))
-    )
-    return trips.withColumn(
-        "dropoff_ts", F.timestamp_millis(F.col("dropoff_ms"))
-    ).withWatermark("dropoff_ts", "0 seconds")
-
-
 def stream_clean_trips(spark: SparkSession, sf_dir: str, **source_opts) -> DataFrame:
-    """Derived trip stream with the P1-P4 filter chain and an event-time
-    column; watermark attached AFTER filtering (so it tracks the cleaned
-    stream, matching where the reference assigns timestamps)."""
-    return clean_trips_from_event_stream(
-        stream_events(spark, sf_dir, **source_opts)
-    )
+    """Derived trip stream: the batch ``clean_trips`` derivation over
+    the streaming events source."""
+    return clean_trips_from_events(stream_events(spark, sf_dir, **source_opts))
 
 
 def q1_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Q1: append-mode windowed count with HAVING."""
-    return q1_agg_from_trips(stream_clean_trips(spark, sf_dir))
+    return taxi.q1(stream_clean_trips(spark, sf_dir))
 
 
 def q2_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Q2: airport classification + windowed sum/avg duration."""
-    return q2_agg_from_trips(stream_clean_trips(spark, sf_dir))
+    return taxi.q2(stream_clean_trips(spark, sf_dir))
 
 
 # State partition count for bounded local replays. A streaming query's
@@ -484,8 +400,6 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-        global LAST_RUN_PROGRESS
-        LAST_RUN_PROGRESS = list(q.recentProgress)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # the bounded replay is done and the result lives in the memory
@@ -506,54 +420,17 @@ def q2_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(q2_stream_df(spark, sf_dir))
 
 
-def trending_counts_from_trips(trips: DataFrame) -> DataFrame:
-    """The streaming half of the trending-cells leaderboard: Q1's
-    windowed aggregation WITHOUT the HAVING floor (a quiet window's top
-    cells still rank) — literally ``q1_agg_from_trips(min_count=None)``
-    so the window/timestamp/geohash derivation can never diverge from
-    Q1's (review finding r06). State is watermark-bounded exactly like
-    Q1's: one row per in-flight (window, cell), closed windows emit
-    once and leave the store."""
-    return q1_agg_from_trips(trips, min_count=None)
-
-
-def rank_trending(counts: DataFrame) -> DataFrame:
-    """Compaction-side rank over FINALIZED windows: top TREND_TOP cells
-    per window. Ranking needs the whole window's counts at once, which a
-    streaming append plan can't see until the watermark closes the
-    window — so the rank runs where the reference's stack ran it (the
-    Kibana dashboard over the ES sink,
-    elasticsearch/kibana-visualizations-and-dashboard.json): batch-side
-    over the emitted windows. The rank's input is post-aggregation
-    (|windows| x |active cells| rows, not trips), partitioned by window
-    — at 100 TB this is the cheap tail of the pipeline."""
-    from pyspark.sql import Window
-
-    from ..plans.taxi import TREND_TOP
-
-    rn = F.row_number().over(
-        Window.partitionBy("timestamp").orderBy(
-            F.desc("pickup_count"), F.asc("location")
-        )
-    )
-    return (
-        counts.withColumn("rank", rn)
-        .filter(F.col("rank") <= TREND_TOP)
-        .select("timestamp", "location", "pickup_count", "rank")
-    )
-
-
 def q_trending_cells_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``plans.taxi.q_trending_cells`` (VERDICT r05
     item 3): the continuously-updating leaderboard the reference serves
     from Kibana, computed engine-side — windowed counts as a streaming
     query (watermark-finalized, append mode), rank-per-window in the
     compaction over the sink. Emission rule matches q1_streaming: only
-    windows the final watermark closed appear."""
-    counts = _run_to_memory(
-        trending_counts_from_trips(stream_clean_trips(spark, sf_dir))
-    )
-    return rank_trending(counts)
+    windows the final watermark closed appear. State is watermark-bounded
+    exactly like Q1's: one row per in-flight (window, cell)."""
+    trips = stream_clean_trips(spark, sf_dir)
+    counts = taxi.with_timestamp(taxi.pickup_counts(taxi.with_cell(trips)))
+    return taxi.rank_trending(_run_to_memory(counts))
 
 
 # ---------------------------------------------------------------------------
@@ -1507,8 +1384,6 @@ def run_taxi_pipeline_single_pass(
     """
     import os
 
-    from ..functions.timeutils import window_end_ms_sql
-
     src_opts: dict[str, str] = {}
     if max_files_per_trigger == "auto":
         max_files_per_trigger = half_source_files(spark, sf_dir)
@@ -1520,10 +1395,7 @@ def run_taxi_pipeline_single_pass(
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_taxi_sp_", dir=base)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        b = geo.with_geohash(
-            batch_df, "location", "pickup_lat", "pickup_lon", 6
-        ).withColumn("wend", F.expr(window_end_ms_sql("dropoff_ms")))
-        b = b.persist()
+        b = taxi.with_cell(batch_df).persist()
         try:
             # q1 partials double as the watermark carrier: these groups
             # cover every clean trip in the batch, so max(dropoff_ms)
@@ -1537,35 +1409,16 @@ def run_taxi_pipeline_single_pass(
             # funnel was measurable (r08 finding); a few files per epoch
             # still keeps the compaction scan shard count bounded.
             (
-                b.groupBy("location", "wend")
+                taxi.by_window(b, "location")
                 .agg(
-                    F.count("*").alias("cnt"),
+                    F.count("*").alias("pickup_count"),
                     F.max("dropoff_ms").alias("max_ms"),
                 )
                 .write.mode("overwrite")
                 .parquet(f"{pdir}/q1/epoch={int(epoch_id)}")
             )
-            q2b = (
-                b.withColumn(
-                    "airport_code",
-                    F.when(
-                        geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")
-                    ).when(
-                        geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")
-                    ),
-                )
-                .filter(F.col("airport_code").isNotNull())
-                .withColumn(
-                    "duration_min",
-                    F.expr(duration_min_sql("dropoff_ms", "pickup_ms", "spark")),
-                )
-            )
             (
-                q2b.groupBy("location", "airport_code", "wend")
-                .agg(
-                    F.sum("duration_min").alias("sum_dur"),
-                    F.count("*").alias("cnt"),
-                )
+                taxi.duration_sums(taxi.with_duration(taxi.at_airport(b)))
                 .write.mode("overwrite")
                 .parquet(f"{pdir}/q2/epoch={int(epoch_id)}")
             )
@@ -1590,34 +1443,30 @@ def run_taxi_pipeline_single_pass(
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     q1p = spark.read.parquet(f"{pdir}/q1")
-    wm = q1p.agg(F.max("max_ms").alias("wm_ms"))
-    pickup = (
-        q1p.groupBy("location", "wend")
-        .agg(F.sum("cnt").alias("pickup_count"))
-        .filter(F.col("pickup_count") >= MIN_PICKUP_COUNT)
-        .crossJoin(F.broadcast(wm))
-        .filter(F.col("wend") - 1 < F.col("wm_ms"))
-        .select(
-            "location",
-            "pickup_count",
-            (F.col("wend") - 1).alias("timestamp"),
+    wm = F.broadcast(q1p.agg(F.max("max_ms").alias("wm_ms")))
+
+    def closed(result: DataFrame) -> DataFrame:
+        # the emission rule: windows the final watermark closed
+        return (
+            result.crossJoin(wm)
+            .filter(F.col("timestamp") < F.col("wm_ms"))
+            .drop("wm_ms")
+        )
+
+    pickup = closed(
+        taxi.q1_result(
+            q1p.groupBy("window", "location").agg(
+                F.sum("pickup_count").alias("pickup_count")
+            )
         )
     )
     q2p = spark.read.parquet(f"{pdir}/q2")
-    duration = (
-        q2p.groupBy("location", "airport_code", "wend")
-        .agg(F.sum("sum_dur").alias("sum_trip_duration"), F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .crossJoin(F.broadcast(wm))
-        .filter(F.col("wend") - 1 < F.col("wm_ms"))
-        .select(
-            "location",
-            "airport_code",
-            "sum_trip_duration",
-            (
-                F.col("sum_trip_duration").cast("double") / F.col("cnt")
-            ).alias("avg_trip_duration"),
-            (F.col("wend") - 1).alias("timestamp"),
+    duration = closed(
+        taxi.q2_result(
+            q2p.groupBy("window", "location", "airport_code").agg(
+                F.sum("sum_trip_duration").alias("sum_trip_duration"),
+                F.sum("cnt").alias("cnt"),
+            )
         )
     )
     return {
@@ -2206,8 +2055,8 @@ def run_taxi_pipeline(
     try:
         queries = []
         for agg_df, doc_type in (
-            (q1_agg_from_trips(trips), "pickup_count"),
-            (q2_agg_from_trips(trips), "trip_duration"),
+            (taxi.q1(trips), "pickup_count"),
+            (taxi.q2(trips), "trip_duration"),
         ):
             queries.append(
                 agg_df.writeStream.foreachBatch(

@@ -3049,6 +3049,36 @@ def test_recover_refuses_ambiguous_residue_when_log_saturated(spark):
         assert rep["discarded_staging"] == ["crashed"]
 
 
+def test_recover_refuses_residue_when_oldest_log_token_unparseable(spark):
+    """A saturated commit log whose OLDEST entry carries no parseable
+    creation time gives no horizon to compare against, so a residue
+    token's absence proves nothing — recovery must raise, however young
+    the residue token is. (The expiry helper's unparseable-is-oldest
+    rule once shadowed the commit-log one and turned this into proof.)"""
+    import json as _json
+
+    import pytest
+
+    docs = _evo_docs(spark)
+    with tempfile.TemporaryDirectory() as base:
+        out = os.path.join(base, "corpus")
+        corpus_io.write_partitioned_corpus(docs, out)
+        mpath = os.path.join(out, corpus_io.MANIFEST)
+        with open(mpath) as f:
+            m = _json.load(f)
+        m["committed_tokens"] = ["external"] + [
+            f"1-{1000 + i}"
+            for i in range(corpus_io.COMMITTED_TOKENS_KEEP - 1)
+        ]
+        m["writer_token"] = m["committed_tokens"][-1]
+        with open(mpath, "w") as f:
+            _json.dump(m, f)
+        os.makedirs(os.path.join(out, "_staging_1-999999"))
+        with pytest.raises(RuntimeError, match="SATURATED"):
+            corpus_io.recover_corpus(out)
+        assert os.path.isdir(os.path.join(out, "_staging_1-999999"))
+
+
 def test_vacuum_holds_one_lease_across_both_phases(spark, monkeypatch):
     """r14 (ADVICE r13 #4): vacuum's recovery phase and file sweep run
     under ONE 'vacuum' lease — no gap where a takedown could start and

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from flink_stream_processing_refarch_spark.plans import taxi
 from flink_stream_processing_refarch_spark.sources import kinesis, kinesis_fake
 from flink_stream_processing_refarch_spark.streaming import jobs, replay
 
@@ -250,7 +251,7 @@ def test_q1_through_kinesis_fake_matches_wire_path(spark, tmp_path):
         spark, "taxi-trips", "local", endpoint=endpoint
     ).load()
     trips = jobs.wire_trips(kinesis.parse_wire_bytes(records))
-    via_fake = _rows(jobs._run_to_memory(jobs.q1_agg_from_trips(trips)))
+    via_fake = _rows(jobs._run_to_memory(taxi.q1(trips)))
     assert via_fake == direct
     assert len(via_fake) > 0
 

@@ -3,11 +3,7 @@ wiring in the __spark_entry__ registry."""
 
 from __future__ import annotations
 
-import sys
-
 from conftest import SF_DIR
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry
 from flink_stream_processing_refarch_spark import plancache

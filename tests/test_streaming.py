@@ -50,12 +50,11 @@ def test_trending_cells_streaming_multibatch(spark):
     from flink_stream_processing_refarch_spark.plans import taxi
 
     mfpt = jobs.half_source_files(spark, SF_DIR)
+    trips = jobs.stream_clean_trips(spark, SF_DIR, maxFilesPerTrigger=mfpt)
     counts = jobs._run_to_memory(
-        jobs.trending_counts_from_trips(
-            jobs.stream_clean_trips(spark, SF_DIR, maxFilesPerTrigger=mfpt)
-        )
+        taxi.with_timestamp(taxi.pickup_counts(taxi.with_cell(trips)))
     )
-    got = jobs.rank_trending(counts)
+    got = taxi.rank_trending(counts)
     expect = _watermark_restricted(spark, taxi.q_trending_cells(spark, SF_DIR))
     assert _rows(got) == _rows(expect)
 
@@ -680,7 +679,7 @@ def test_snz_wire_replay_end_to_end(spark, tmp_path):
 
     def q1(src, **kw):
         trips = jobs.stream_trips_from_wire(spark, src, **kw)
-        return jobs._run_to_memory(jobs.q1_agg_from_trips(trips))
+        return jobs._run_to_memory(taxi.q1(trips))
 
     expected = _rows(q1(plain))
     assert expected  # non-degenerate

@@ -4,9 +4,10 @@ fail loudly, never print a green transcript over zero queries
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+from conftest import ROOT
 
 from tools import check_oracle
 
@@ -86,7 +87,7 @@ def test_make_ledger_covers_every_registry_entry(tmp_path, monkeypatch):
 
     r = subprocess.run(
         [sys.executable, "tools/make_ledger.py"],
-        cwd="/root/repo",
+        cwd=ROOT,
         capture_output=True,
         text=True,
         timeout=120,
@@ -94,7 +95,7 @@ def test_make_ledger_covers_every_registry_entry(tmp_path, monkeypatch):
     assert r.returncode == 0, r.stderr[-500:]
     import __spark_entry__ as entry
 
-    text = open("/root/repo/LEDGER.md").read()
+    text = open(os.path.join(ROOT, "LEDGER.md")).read()
     for name in entry.queries():
         assert f"| {name} |" in text, name
 

@@ -14,9 +14,8 @@ mtimes strictly increasing so the file source consumes them in event-
 time order) with ``maxFilesPerTrigger=1`` — 10 micro-batches, each
 spanning one replica's compressed event-time band, so the watermark
 advances between batches and window state must drain. The plans are
-the registry's own (``clean_trips_from_event_stream`` ->
-``q{1,2}_agg_from_trips`` — the exact composition ``q1_stream_df``
-serves), run to a noop sink with RocksDB state, availableNow.
+the registry's own (``clean_trips_from_events`` -> ``taxi.q{1,2}`` —
+the exact composition ``q1_stream_df`` serves), run to a noop sink with RocksDB state, availableNow.
 
 Reported per query: median wall of N_RUNS, events/s (n_events / wall),
 micro-batch count, peak state rows across batches (the store's
@@ -62,6 +61,9 @@ def main() -> None:
 
     from flink_stream_processing_refarch_spark.plans import taxi
     from flink_stream_processing_refarch_spark.schemas import load_table
+    from flink_stream_processing_refarch_spark.sources.trips import (
+        clean_trips_from_events,
+    )
 
     scale = sys.argv[1] if len(sys.argv) > 1 else "sf1"
     replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 10
@@ -80,12 +82,8 @@ def main() -> None:
     n_events = load_table(spark, comp, "events").count()
 
     cases = {
-        "q1_streaming": lambda ev: jobs.q1_agg_from_trips(
-            jobs.clean_trips_from_event_stream(ev)
-        ),
-        "q2_streaming": lambda ev: jobs.q2_agg_from_trips(
-            jobs.clean_trips_from_event_stream(ev)
-        ),
+        "q1_streaming": lambda ev: taxi.q1(clean_trips_from_events(ev)),
+        "q2_streaming": lambda ev: taxi.q2(clean_trips_from_events(ev)),
     }
     batch_twin = {
         "q1_streaming": taxi.q1_pickup_count,
@@ -127,8 +125,8 @@ def main() -> None:
         "",
         f"Generated by `tools/scale_taxi_streaming.py {scale}"
         f" {replicas}`: the registry's",
-        "own q1/q2 streaming plans (`clean_trips_from_event_stream` ->",
-        f"`q{{1,2}}_agg_from_trips`) over the composite {scale} events"
+        "own q1/q2 streaming plans (`clean_trips_from_events` ->",
+        f"`taxi.q{{1,2}}`) over the composite {scale} events"
         " corpus",
         f"({replicas} time-shifted sf0.1 replicas, mtime-ordered), one"
         " replica",

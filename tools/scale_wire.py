@@ -79,6 +79,7 @@ def run_leg(label: str, fn) -> tuple[float, object]:
 def main() -> None:
     from scale_taxi import build_composite
 
+    from flink_stream_processing_refarch_spark.plans import taxi
     from flink_stream_processing_refarch_spark.sources import kinesis
     from flink_stream_processing_refarch_spark.streaming import jobs, replay
 
@@ -100,7 +101,7 @@ def main() -> None:
         spark, "taxi-trips", "local", endpoint=wend
     ).load()
     jobs._run_to_memory(
-        jobs.q1_agg_from_trips(jobs.wire_trips(kinesis.parse_wire_bytes(wrec)))
+        taxi.q1(jobs.wire_trips(kinesis.parse_wire_bytes(wrec)))
     ).count()
     jobs.q1_from_wire(spark, wwire).count()
     shutil.rmtree(wbase, ignore_errors=True)
@@ -139,7 +140,7 @@ def main() -> None:
                 spark, "taxi-trips", "local", endpoint=endpoint
             ).load()
             trips = jobs.wire_trips(kinesis.parse_wire_bytes(records))
-            return _rows(jobs._run_to_memory(jobs.q1_agg_from_trips(trips)))
+            return _rows(jobs._run_to_memory(taxi.q1(trips)))
 
         r["consume"], via_fake = run_leg("consume", consume)
         r["direct"], direct = run_leg(
@@ -204,6 +205,7 @@ def knob_main() -> None:
     to the direct path at every setting."""
     from scale_taxi import build_composite
 
+    from flink_stream_processing_refarch_spark.plans import taxi
     from flink_stream_processing_refarch_spark.sources import kinesis
     from flink_stream_processing_refarch_spark.streaming import jobs, replay
 
@@ -241,7 +243,7 @@ def knob_main() -> None:
                 spark, "taxi-trips", "local", endpoint=endpoint
             ).load()
             trips = jobs.wire_trips(kinesis.parse_wire_bytes(records))
-            return _rows(jobs._run_to_memory(jobs.q1_agg_from_trips(trips)))
+            return _rows(jobs._run_to_memory(taxi.q1(trips)))
 
         w_consume, via_fake = run_leg(f"consume mf={files_per}", consume)
         if direct is None:
@@ -293,6 +295,7 @@ def fsck_main() -> None:
 
     from scale_taxi import build_composite
 
+    from flink_stream_processing_refarch_spark.plans import taxi
     from flink_stream_processing_refarch_spark.sources import (
         kinesis, kinesis_fake,
     )
@@ -335,7 +338,7 @@ def fsck_main() -> None:
                 spark, "taxi-trips", "local", endpoint=endpoint
             ).load()
             trips = jobs.wire_trips(kinesis.parse_wire_bytes(records))
-            return _rows(jobs._run_to_memory(jobs.q1_agg_from_trips(trips)))
+            return _rows(jobs._run_to_memory(taxi.q1(trips)))
 
         w_consume, _ = run_leg(f"consume {label}", consume)
         walls, rep = [], None
