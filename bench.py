@@ -72,7 +72,7 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
         qs = entry.queries()
-        # q1/q2_streaming warm the micro-batch engine + RocksDB classes +
+        # q1/q2_streaming warm the micro-batch engine + state-store classes +
         # each query's codegen (q2's airport/duration expression tree
         # compiles once), stateful_sessionize the python state workers —
         # first-streaming-query init otherwise lands inside timed runs.

@@ -2980,13 +2980,10 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`upsert_corpus_retrying` (r10): maintenance interleaving
     between micro-batches holds the lease legitimately, and the stream
     must wait it out, not die on MaintenanceLeaseHeld."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..schemas import load_table, scratch_dir
-    from ..streaming.jobs import stream_documents
+    from ..streaming.jobs import run_bounded, stream_documents
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -2994,22 +2991,10 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("corpus_rts_")
     write_partitioned_corpus(docs, out)
     sdocs = stream_documents(spark, sf_dir).select("doc_id", "text", "source")
-    ck = tempfile.mkdtemp(
-        prefix="upsck_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
+    writer = _delta_from_docs(sdocs).writeStream.foreachBatch(
+        lambda batch, eid: upsert_corpus_retrying(batch, out)
     )
-    try:
-        q = (
-            _delta_from_docs(sdocs)
-            .writeStream.foreachBatch(
-                lambda batch, eid: upsert_corpus_retrying(batch, out)
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
+    run_bounded(spark, [("upsert", writer)])
     return spark.read.parquet(out).select(
         "doc_id", "source", F.md5("text").alias("h")
     )
@@ -3584,6 +3569,7 @@ def q_corpus_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..schemas import load_table, scratch_dir
     from ..sources import corpus_cdc
+    from ..streaming.jobs import _run_to_memory
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -3608,18 +3594,7 @@ def q_corpus_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("since_token", t0)
         .load()
     )
-    mem = f"cdc_feed_{os.path.basename(out).rstrip(os.sep)}".replace(
-        "-", "_"
-    )
-    q = (
-        feed.writeStream.format("memory")
-        .queryName(mem)
-        .option("checkpointLocation", scratch_dir("corpus_cdcs_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(mem).select(
+    got = _run_to_memory(feed).select(
         "doc_id",
         "source",
         F.md5("text").alias("h"),

@@ -410,6 +410,7 @@ def q_cdc_index_refresh_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..schemas import scratch_dir
     from ..sources import corpus_cdc
+    from ..streaming.jobs import run_bounded
     from .corpus_io import (
         _hive_escape,
         _val_str,
@@ -483,13 +484,7 @@ def q_cdc_index_refresh_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
                 ignore_errors=True,
             )
 
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", scratch_dir("cdc_idxs_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(spark, [("refresh", feed.writeStream.foreachBatch(apply_batch))])
     return spark.read.parquet(idx).select("doc_id", "source", "h")
 
 

@@ -11,7 +11,11 @@ The reference's ParameterTool args map to local/cluster equivalents:
                                       executor-side per epoch; swap the sink
                                       body for the ES connector)
   checkpoint dir (S3)                 --checkpoint
-  RocksDB state backend               on by default (RocksDBStateStoreProvider)
+  RocksDB state backend               the session's state-store provider
+                                      (Spark's HDFS-backed default unless
+                                      the deployment sets
+                                      spark.sql.streaming.stateStore.
+                                      providerClass)
   SHARD_GETRECORDS_* throttling       --max-files-per-trigger
 
 Runs Q1 + Q2 as two stateful streaming queries (windowed aggregation in
@@ -48,7 +52,8 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument(
         "--checkpoint",
         default=None,
-        help="checkpoint root (restartable; defaults to a temp dir)",
+        help="checkpoint root (restartable; without it the run checkpoints"
+        " in a throwaway dir)",
     )
     p.add_argument(
         "--max-files-per-trigger",

@@ -273,18 +273,26 @@ def _cleanup_scratch_dirs() -> None:  # pragma: no cover - exit hook
         shutil.rmtree(d, ignore_errors=True)
 
 
-def scratch_dir(prefix: str) -> str:
-    """A throwaway materialization directory: tmpfs (/dev/shm) when
-    present, removed at interpreter exit. The ONE implementation of the
-    pattern every stamp-keyed scratch materialization uses (normalized
-    events, PQ codes sidecar, corpus-roundtrip corpora, embedding split
-    replicas) — cleanup semantics live here, not in per-site copies."""
-    import atexit
+def tmpfs_dir(prefix: str) -> str:
+    """A new temp directory on tmpfs (/dev/shm) when present, else in the
+    default temp dir. The one place that choice is made; the caller owns
+    the directory's lifetime."""
     import os
     import tempfile
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out = tempfile.mkdtemp(prefix=prefix, dir=base)
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A throwaway materialization directory (``tmpfs_dir``), removed at
+    interpreter exit. The ONE implementation of the pattern every
+    stamp-keyed scratch materialization uses (normalized events, PQ codes
+    sidecar, corpus-roundtrip corpora, embedding split replicas) —
+    cleanup semantics live here, not in per-site copies."""
+    import atexit
+
+    out = tmpfs_dir(prefix)
     if not _SCRATCH_DIRS:
         atexit.register(_cleanup_scratch_dirs)
     _SCRATCH_DIRS.append(out)

@@ -226,9 +226,7 @@ def stream_text_auto(spark, path: str, glob: str | None = None, **source_opts):
     reader = spark.readStream.format("binaryFile").schema(_BINARY_FILE_SCHEMA)
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    for k, v in source_opts.items():
-        reader = reader.option(k, v)
-    files = reader.load(path).select("content")
+    files = reader.options(**source_opts).load(path).select("content")
 
     def _lines(batches):
         import pandas as pd

@@ -101,10 +101,10 @@ def kinesis_writer(
     stream_name: str,
     region: str,
     *,
-    checkpoint: str,
     endpoint: str | None = None,
 ):
-    """Configured writeStream for replaying wire JSON to Kinesis (S7).
+    """Configured writeStream for replaying wire JSON to Kinesis (S7). The
+    caller starts it and supplies its checkpoint (``jobs.run_bounded``).
 
     Partition key mirrors the producer's payload-hash routing
     (kinesis-taxi-stream-producer/.../Event.java:38-40): a ``partitionKey``
@@ -122,10 +122,9 @@ def kinesis_writer(
         recover_wire_stream(root, stream_name)
         return out.writeStream.foreachBatch(
             lambda batch, eid: write_wire_batch(batch, eid, root, stream_name)
-        ).option("checkpointLocation", checkpoint)
+        )
     return (
         out.writeStream.format(KINESIS_FORMAT)
         .option("streamName", stream_name)
         .option("region", region)
-        .option("checkpointLocation", checkpoint)
     )

@@ -21,8 +21,15 @@ Architecture parity notes:
     window state; the source is scanned twice), and as ONE scan in
     ``run_taxi_pipeline_single_pass`` (per-batch partial aggregates from
     a cached micro-batch, merged at the end).
-  - RocksDB state store (ProcessTaxiStream.java:145) maps to
-    ``spark.sql.streaming.stateStore.providerClass`` = RocksDBStateStoreProvider.
+  - RocksDB state store (ProcessTaxiStream.java:145): the provider comes
+    from the session (``spark.sql.streaming.stateStore.providerClass``);
+    the engine never sets it. Spark's default HDFS-backed store measured
+    no slower than RocksDB on every stateful bounded replay here and
+    faster on the paced pipeline, so a deployment that wants RocksDB sets
+    that one conf itself. ``tws_user_totals`` (transformWithState) is the
+    exception that needs RocksDB: its session must provide it.
+  - Run mechanics (availableNow start, checkpoint, state width) live in
+    one helper, :func:`run_bounded`.
   - Source throttling (SHARD_GETRECORDS_MAX, :76-77) maps to
     ``maxFilesPerTrigger`` / connector rate options.
 """
@@ -30,10 +37,13 @@ Architecture parity notes:
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -148,18 +158,18 @@ def stream_events(spark: SparkSession, sf_dir: str, **source_opts) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     norm = normalized_events_path(spark, sf_dir)
     if norm is not None:
-        reader = spark.readStream.schema(_events_schema(spark, norm)).option(
-            "pathGlobFilter", "*.parquet"
+        reader = (
+            spark.readStream.schema(_events_schema(spark, norm))
+            .option("pathGlobFilter", "*.parquet")
+            .options(**source_opts)
         )
-        for k, v in source_opts.items():
-            reader = reader.option(k, v)
         return reader.parquet(norm)  # ts already BIGINT nanos
     # Direct branch (the at-scale shape: the scan already has >= cores
     # splits).
     src = f"{sf_dir}/events.parquet"
-    reader = spark.readStream.schema(_events_schema(spark, src))
-    for k, v in source_opts.items():
-        reader = reader.option(k, v)
+    reader = spark.readStream.schema(_events_schema(spark, src)).options(
+        **source_opts
+    )
     return normalize_event_ts(_stream_table(reader, sf_dir, "events"))
 
 
@@ -192,10 +202,7 @@ def stream_trips_from_wire(
 
         raw = stream_text_auto(spark, json_dir, **source_opts)
     else:
-        reader = spark.readStream
-        for k, v in source_opts.items():
-            reader = reader.option(k, v)
-        raw = reader.text(json_dir)
+        raw = spark.readStream.options(**source_opts).text(json_dir)
     ev = (
         raw.select(F.from_json("value", EVENT_SCHEMA).alias("e"))
         .filter(F.col("e").isNotNull() & F.col("e.type").isNotNull())
@@ -236,32 +243,13 @@ def pump_wire_to_kinesis(
     StreamPopulator.java:62-66) into the stream at ``endpoint`` —
     a ``file://`` endpoint drives the local wire fake. Bounded
     (availableNow); blocks until the pump drains."""
-    import shutil
-    import tempfile as _tf
-
     from ..sources.kinesis import kinesis_writer
 
-    reader = spark.readStream
-    for k, v in source_opts.items():
-        reader = reader.option(k, v)
-    ck = _tf.mkdtemp(
-        prefix="kck_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
+    lines = spark.readStream.options(**source_opts).text(json_dir)
+    run_bounded(
+        spark,
+        [("pump", kinesis_writer(lines, stream_name, "local", endpoint=endpoint))],
     )
-    try:
-        q = (
-            kinesis_writer(
-                reader.text(json_dir),
-                stream_name,
-                "local",
-                checkpoint=ck,
-                endpoint=endpoint,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
 
 
 def q1_kinesis_wire(
@@ -291,9 +279,7 @@ def q1_kinesis_wire(
     job per run, independent of epoch count) instead of doubling every
     consume's scan. A production call-site now has to pick explicitly
     rather than inherit the doubled scan silently."""
-    import shutil
-    import tempfile as _tf
-
+    from ..schemas import tmpfs_dir
     from ..sources.kinesis import kinesis_reader, parse_wire_bytes
 
     if audit not in ("inline", "off"):
@@ -302,9 +288,7 @@ def q1_kinesis_wire(
             f"got {audit!r}"
         )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _tf.mkdtemp(
-        prefix="kwire_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
+    base = tmpfs_dir("kwire_")
     try:
         wire_dir = os.path.join(base, "wire")
         from . import replay as _replay
@@ -354,61 +338,68 @@ def q2_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # State partition count for bounded local replays. A streaming query's
 # state partitioning is fixed by spark.sql.shuffle.partitions at first
-# start, and EVERY partition opens its own RocksDB instance per batch —
-# at local scale 32 instances × 2 micro-batches is pure fixed cost (~4×
-# the whole query time, measured). 4 vs 8 saves a further ~0.7-1.2 s per
-# bounded replay at sf0.1 (r02 probe; 2 is no better than 4, and the
-# HDFS-backed provider is within JVM noise of RocksDB, so RocksDB stays
-# for A6 parity). On a real cluster this is sized to total executor
-# cores / expected state volume instead.
+# start, and every partition opens its own state store instance per
+# batch — at local scale 32 instances x 2 micro-batches is pure fixed
+# cost (~4x the whole query time, measured). 4 vs 8 saves a further
+# ~0.7-1.2 s per bounded replay at sf0.1 (r02 probe; 2 is no better than
+# 4). On a real cluster this is sized to total executor cores / expected
+# state volume instead.
 STREAM_STATE_PARTITIONS = 4
 
 
-def _run_to_memory(
-    df: DataFrame, use_rocksdb: bool = True, output_mode: str = "append"
-) -> DataFrame:
-    """Run a bounded streaming query (availableNow) into a memory sink and
-    return the final result as a batch DataFrame. ``output_mode``:
-    'append' for watermark-finalized streams, 'complete' for running
-    (non-windowed) aggregations whose latest snapshot is the result."""
-    spark = df.sparkSession
-    if use_rocksdb:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+def run_bounded(
+    spark: SparkSession,
+    writers: Iterable[tuple[str, DataStreamWriter]],
+    checkpoint_dir: str | None = None,
+) -> dict[str, StreamingQuery]:
+    """Run bounded streaming queries to completion — the one place the
+    engine's run mechanics live.
+
+    Every ``(name, writer)`` pair starts with the ``availableNow`` trigger
+    as soon as it is drawn from ``writers`` (so a generator builds the
+    next query's plan while the previous one already runs) and
+    checkpoints in ``<checkpoint_dir>/<name>``. Without a
+    ``checkpoint_dir`` the root is a throwaway tmpfs directory (the
+    offset/commit/state logs fsync per micro-batch; ~1 s/query on ext4),
+    removed after the run. ``spark.sql.shuffle.partitions`` is
+    ``STREAM_STATE_PARTITIONS`` for the run only and restored afterwards,
+    also when a query fails. The queries run concurrently; the finished
+    queries are returned by name. The state-store provider is whatever
+    the session has — this helper never sets it."""
+    from ..schemas import tmpfs_dir
+
+    root = checkpoint_dir or tmpfs_dir("ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    # Bounded throwaway replay -> checkpoint on tmpfs when available (the
-    # offset/commit/state logs fsync per micro-batch; ~1s/query on ext4).
-    # Durable jobs (run_taxi_pipeline, the CLI) pass their own
-    # checkpointLocation on real storage.
-    import os
-
-    ck_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=ck_base)
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    queries: dict[str, StreamingQuery] = {}
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        for name, writer in writers:
+            queries[name] = (
+                writer.option("checkpointLocation", os.path.join(root, name))
+                .trigger(availableNow=True)
+                .start()
+            )
+        for q in queries.values():
+            q.awaitTermination()
     finally:
+        for q in queries.values():
+            if q.isActive:
+                q.stop()
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # the bounded replay is done and the result lives in the memory
-        # sink — the throwaway checkpoint would otherwise accumulate in
-        # /dev/shm (hundreds observed across a test session)
-        import shutil
+        if checkpoint_dir is None:
+            shutil.rmtree(root, ignore_errors=True)
+    return queries
 
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+
+def _run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a bounded streaming query into a memory sink and return the
+    final result as a batch DataFrame. ``output_mode``: 'append' for
+    watermark-finalized streams, 'complete' for running (non-windowed)
+    aggregations whose latest snapshot is the result."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    run_bounded(df.sparkSession, [("memory", writer)])
+    return df.sparkSession.table(name)
 
 
 def q1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,9 +726,7 @@ def stream_documents(
     stand-in for a corpus landing zone (S3 prefix / Kafka topic) that new
     crawl shards arrive in. Shape-aware via ``_stream_table`` (a single
     file locally, a directory of parts at scale)."""
-    reader = spark.readStream.schema(DOCS_SCHEMA)
-    for k, v in source_opts.items():
-        reader = reader.option(k, v)
+    reader = spark.readStream.schema(DOCS_SCHEMA).options(**source_opts)
     return _stream_table(reader, sf_dir, "documents")
 
 
@@ -910,18 +899,13 @@ def q_winnow_fingerprints_streaming(
     applies verbatim."""
     from ..operators.dedup import winnow_fps_from_docs
 
-    return _run_to_memory(
-        winnow_fps_from_docs(stream_documents(spark, sf_dir)),
-        use_rocksdb=False,
-    )
+    return _run_to_memory(winnow_fps_from_docs(stream_documents(spark, sf_dir)))
 
 
 def q_decontaminate_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay of the streaming decontamination gate (stateless ->
-    plain append; RocksDB unnecessary)."""
-    return _run_to_memory(
-        decontaminate_stream_df(spark, sf_dir), use_rocksdb=False
-    )
+    plain append)."""
+    return _run_to_memory(decontaminate_stream_df(spark, sf_dir))
 
 
 def _decontaminate_streaming_sql() -> str:
@@ -1382,7 +1366,7 @@ def run_taxi_pipeline_single_pass(
     job instead of per-batch state lookups — the classic
     partial-aggregate + compaction pipeline.
     """
-    import os
+    from ..schemas import scratch_dir
 
     src_opts: dict[str, str] = {}
     if max_files_per_trigger == "auto":
@@ -1390,9 +1374,7 @@ def run_taxi_pipeline_single_pass(
     if max_files_per_trigger is not None:
         src_opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
     trips = stream_clean_trips(spark, sf_dir, **src_opts)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    pdir = partials_dir or tempfile.mkdtemp(prefix="taxi_partials_", dir=base)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_taxi_sp_", dir=base)
+    pdir = partials_dir or scratch_dir("taxi_partials_")
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         b = taxi.with_cell(batch_df).persist()
@@ -1425,22 +1407,14 @@ def run_taxi_pipeline_single_pass(
         finally:
             b.unpersist()
 
-    # Same bounded-replay sizing rationale as _run_to_memory: the
-    # per-epoch aggregates are small, so session-wide shuffle widths
-    # just add scheduling floor per epoch.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            trips.writeStream.foreachBatch(body)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # run_bounded's state width also sizes the per-epoch partial
+    # aggregates: they are small, so session-wide shuffle widths just add
+    # scheduling floor per epoch.
+    run_bounded(
+        spark,
+        [("taxi", trips.writeStream.foreachBatch(body).outputMode("append"))],
+        checkpoint_dir,
+    )
 
     q1p = spark.read.parquet(f"{pdir}/q1")
     wm = F.broadcast(q1p.agg(F.max("max_ms").alias("wm_ms")))
@@ -1473,7 +1447,7 @@ def run_taxi_pipeline_single_pass(
         "pickup_count": pickup,
         "trip_duration": duration,
         "partials_dir": pdir,
-        "checkpoint_dir": ckpt,
+        "checkpoint_dir": checkpoint_dir,
     }
 
 
@@ -1761,21 +1735,8 @@ def q_pq_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import scratch_dir
 
     out = scratch_dir("pq_sidecar_stream_")
-    ckpt = scratch_dir("ckpt_pq_ingest_")
-    import shutil
-
-    try:
-        q = (
-            coded.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = coded.writeStream.format("parquet").option("path", out)
+    run_bounded(spark, [("pq", writer.outputMode("append"))])
     return spark.read.parquet(out).select(
         "vec_id",
         F.array_join(
@@ -2011,12 +1972,13 @@ def run_taxi_pipeline(
     ``collect_results=True`` the returned DataFrames are a distributed
     read-back of the sink files (``read_bulk_docs``); ``False`` skips even
     that (the CLI path): results then live only in the sink files.
+    Without ``checkpoint_dir`` the run checkpoints in a throwaway
+    directory (:func:`run_bounded`) and cannot be resumed.
     """
     from ..schemas import PICKUP_COUNT_SCHEMA, TRIP_DURATION_SCHEMA
     from .sinks import EsBulkFileSink, read_bulk_docs, write_batch_to_es
 
     out_dir = out_dir or tempfile.mkdtemp(prefix="es_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_pipeline_")
     src_opts: dict[str, str] = {}
     if max_files_per_trigger is not None:
         src_opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
@@ -2035,9 +1997,7 @@ def run_taxi_pipeline(
         from ..sources.kinesis import kinesis_reader, parse_wire_bytes
 
         reader = kinesis_reader(spark, stream_name, "local", endpoint=endpoint)
-        for k, v in src_opts.items():
-            reader = reader.option(k, v)
-        trips = wire_trips(parse_wire_bytes(reader.load()))
+        trips = wire_trips(parse_wire_bytes(reader.options(**src_opts).load()))
     else:
         raise ValueError(f"unknown source_format: {source_format!r}")
 
@@ -2050,33 +2010,37 @@ def run_taxi_pipeline(
 
         return body
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        queries = []
-        for agg_df, doc_type in (
-            (taxi.q1(trips), "pickup_count"),
-            (taxi.q2(trips), "trip_duration"),
-        ):
-            queries.append(
-                agg_df.writeStream.foreachBatch(
+    # A generator, so Q2's plan is built while Q1 already runs and Q1's
+    # documents are not held back by it (building both first cost the
+    # paced dashboard ~4-17% on p50 freshness). Both run concurrently,
+    # each checkpointing in <checkpoint_dir>/<doc_type>.
+    run_bounded(
+        spark,
+        (
+            (
+                doc_type,
+                query(trips)
+                .writeStream.foreachBatch(
                     relay(EsBulkFileSink(f"{out_dir}/{doc_type}"), doc_type)
                 )
-                .outputMode("append")
-                .option("checkpointLocation", f"{ckpt}/{doc_type}")
-                .trigger(availableNow=True)
-                .start()
+                .outputMode("append"),
             )
-        for q in queries:  # both run concurrently; await in order
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            for query, doc_type in (
+                (taxi.q1, "pickup_count"),
+                (taxi.q2, "trip_duration"),
+            )
+        ),
+        checkpoint_dir,
+    )
 
     # 'pickup_count'/'trip_duration' keys are ALWAYS present (the
     # pre-r07 contract callers may rely on); collect_results=False keeps
     # the read-back lazy by pointing both at the sink paths instead of
     # DataFrames over them (results live only in the sink files).
-    out: dict[str, DataFrame | str] = {"out_dir": out_dir, "checkpoint_dir": ckpt}
+    out: dict[str, DataFrame | str | None] = {
+        "out_dir": out_dir,
+        "checkpoint_dir": checkpoint_dir,
+    }
     if collect_results:
         # distributed read-back of what the executors wrote — results are
         # DataFrames over the sink files, not a driver-side buffer

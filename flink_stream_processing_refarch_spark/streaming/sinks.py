@@ -27,113 +27,35 @@ payload is serialized with ``to_json`` and written with ``df.write.text``
 straight from every task, exactly as the reference's sink runs in every
 parallel subtask (ElasticsearchJestSink.java:45-102). Nothing on the
 result path passes through the driver; ``maxRecordsPerFile`` enforces the
-reference's 500-doc bulk-request cap per output file. The buffered
-``EsBulkFileSink.add/flush`` path remains only for ad-hoc single-process
-use and as the direct demonstration of the reference's count/age flush
-policy (tests/test_streaming.py::test_es_buffered_flush_policy).
+reference's 500-doc bulk-request cap per output file. The reference's
+5000-ms age flush has no counterpart: each epoch is written whole when
+its micro-batch commits.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_MAX_DOCS = 500   # ElasticsearchJestSink.java:61-63
-DEFAULT_MAX_AGE_MS = 5000
 
 
 class EsBulkFileSink:
-    """Buffered bulk writer with the reference's 500-doc / 5000-ms policy.
-
-    Used inside ``foreachBatch``: rows arrive as JSON strings (already
-    serialized executor-side with ``to_json`` — the driver only relays
-    compact bulk payloads, it never serializes rows itself).
-    """
+    """Where one result stream's bulk files go: the output directory, the
+    ES index named in each action line, and the per-file document cap."""
 
     def __init__(
         self,
         out_dir: str,
         index: str = "taxi-dashboard",  # ProcessTaxiStream.java:59
         max_docs: int = DEFAULT_MAX_DOCS,
-        max_age_ms: int = DEFAULT_MAX_AGE_MS,
     ) -> None:
         self.out_dir = out_dir
         self.index = index
         self.max_docs = max_docs
-        self.max_age_ms = max_age_ms
-        self._buf: list[str] = []
-        self._oldest_ms: float | None = None
-        self._flush_seq = 0
-        self._epoch: int | None = None
         os.makedirs(out_dir, exist_ok=True)
-
-    def begin_epoch(self, epoch_id: int) -> None:
-        """Start (or REstart) an epoch: drop any files a previous partial
-        delivery of this epoch wrote, reset the per-epoch flush sequence.
-        Makes epoch redelivery after recovery idempotent."""
-        import glob as _glob
-
-        self._epoch = int(epoch_id)
-        self._flush_seq = 0
-        for stale in _glob.glob(
-            os.path.join(self.out_dir, f"bulk-e{self._epoch:06d}-*.ndjson")
-        ):
-            os.remove(stale)
-
-    def add(self, doc_type: str, doc_json: str) -> None:
-        # bulk action line + source line, as the reference's Jest Bulk does
-        action = json.dumps(
-            {"index": {"_index": self.index, "_type": doc_type}}
-        )
-        self._buf.append(action)
-        self._buf.append(doc_json)
-        if self._oldest_ms is None:
-            self._oldest_ms = time.time() * 1000
-        if self._should_flush():
-            self.flush()
-
-    def flush_count(self) -> int:
-        """Flushes performed in the current epoch (policy observability;
-        the flush-policy unit test reads it)."""
-        return self._flush_seq
-
-    def _should_flush(self) -> bool:
-        if len(self._buf) // 2 >= self.max_docs:
-            return True
-        return (
-            self._oldest_ms is not None
-            and time.time() * 1000 - self._oldest_ms >= self.max_age_ms
-        )
-
-    def flush(self) -> str | None:
-        """Write the buffered bulk payload; called unconditionally at epoch
-        commit (the snapshotState flush, ElasticsearchJestSink.java:139-148)."""
-        if not self._buf:
-            return None
-        if self._epoch is not None:
-            name = f"bulk-e{self._epoch:06d}-{self._flush_seq:03d}.ndjson"
-        else:  # non-epoch use (ad-hoc batch writes)
-            name = f"bulk-{self._flush_seq:06d}.ndjson"
-        path = os.path.join(self.out_dir, name)
-        with open(path, "w") as f:
-            f.write("\n".join(self._buf) + "\n")
-        self._buf.clear()
-        self._oldest_ms = None
-        self._flush_seq += 1
-        return path
-
-
-def docs_as_json(df: DataFrame, doc_type: str) -> DataFrame:
-    """Serialize result rows to the reference's snake_case JSON documents
-    (events/es/Document.java:34-37) executor-side."""
-    return df.select(
-        F.lit(doc_type).alias("doc_type"),
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("doc"),
-    )
 
 
 def bulk_payload(df: DataFrame, doc_type: str, index: str) -> DataFrame:
@@ -157,10 +79,7 @@ def epoch_dir(out_dir: str, epoch_id: int) -> str:
 
 
 def write_batch_to_es(
-    batch_df: DataFrame,
-    sink: EsBulkFileSink,
-    doc_type: str,
-    epoch_id: int | None = None,
+    batch_df: DataFrame, sink: EsBulkFileSink, doc_type: str, epoch_id: int
 ) -> None:
     """foreachBatch body for one result stream — EXECUTOR-SIDE writes.
 
@@ -172,36 +91,21 @@ def write_batch_to_es(
     redelivery — exactly-once to the transport, no driver materialization
     of result rows anywhere on this path.
     """
-    if epoch_id is not None:
-        target = epoch_dir(sink.out_dir, epoch_id)
-    else:
-        # ad-hoc (non-epoch) batches get a unique dir that the
-        # ``bulk-e*`` reader glob matches: a fixed 'bulk-adhoc' name was
-        # invisible to iter_bulk_lines AND overwrote the previous
-        # ad-hoc batch (review finding r07)
-        import uuid as _uuid
-
-        target = os.path.join(
-            sink.out_dir, f"bulk-e-adhoc-{_uuid.uuid4().hex[:12]}"
-        )
     (
         bulk_payload(batch_df, doc_type, sink.index)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", sink.max_docs)
-        .text(target)
+        .text(epoch_dir(sink.out_dir, epoch_id))
     )
 
 
 def iter_bulk_lines(out_dir: str):
     """Yield every bulk payload line under ``out_dir`` (driver-side test /
-    CLI helper, not on the streaming path): epoch directories of text part
-    files, plus any legacy single-process ``.ndjson`` flush files."""
+    CLI helper, not on the streaming path): the text part files of the
+    epoch directories."""
     import glob as _glob
 
-    paths = sorted(
-        _glob.glob(os.path.join(out_dir, "bulk-e*", "part-*"))
-        + _glob.glob(os.path.join(out_dir, "*.ndjson"))
-    )
+    paths = sorted(_glob.glob(os.path.join(out_dir, "bulk-e*", "part-*")))
     for p in paths:
         if p.endswith(".crc") or os.path.basename(p).startswith("."):
             continue

@@ -17,7 +17,11 @@ SF_DIR = "/root/testdata/sf0.001"  # small SF: tests verify correctness only
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", shuffle_partitions=8)
+    # The engine takes its state-store provider from the session; the
+    # test session runs tws_user_totals, which needs RocksDB.
+    from __spark_entry__ import ROCKSDB_CONF
+
+    spark = get_spark("tests", shuffle_partitions=8, extra_conf=ROCKSDB_CONF)
     yield spark
 
 

@@ -58,3 +58,52 @@ def test_checkout_root_is_not_hard_coded():
                 if pat.search(line):
                     hits.append(f"{os.path.relpath(path, ROOT)}:{i}")
     assert not hits, hits
+
+
+def _docstring_ids(tree: ast.AST) -> set[int]:
+    return {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                          ast.AsyncFunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+
+
+def _available_now_callers(node: ast.AST, fn: str | None = None) -> list:
+    """The innermost enclosing function of every
+    ``.trigger(availableNow=...)`` call under ``node``."""
+    out = []
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            out += _available_now_callers(child, child.name)
+            continue
+        if (isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "trigger"
+                and any(k.arg == "availableNow" for k in child.keywords)):
+            out.append(fn)
+        out += _available_now_callers(child, fn)
+    return out
+
+
+def test_streaming_run_mechanics_live_in_one_helper():
+    """Bounded streaming runs start in ``jobs.run_bounded`` only, and the
+    package's code (docstrings aside) never names the state-store
+    provider conf: the provider comes from the session."""
+    triggers, provider = [], []
+    for path in _py_files(PACKAGE):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, PACKAGE)
+        triggers += [(rel, fn) for fn in _available_now_callers(tree)]
+        docs = _docstring_ids(tree)
+        provider += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and id(n) not in docs and "stateStore.providerClass" in n.value
+        ]
+    assert triggers == [(os.path.join("streaming", "jobs.py"), "run_bounded")], triggers
+    assert not provider, provider

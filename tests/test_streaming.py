@@ -847,9 +847,7 @@ def test_decontaminate_streaming_multibatch(spark, duck, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(flat)
     )
-    out = jobs._run_to_memory(
-        jobs.decontaminate_gate(stream, ev), use_rocksdb=False
-    )
+    out = jobs._run_to_memory(jobs.decontaminate_gate(stream, ev))
     oracle = duck.execute(jobs.ORACLES["decontaminate_streaming"]).fetchall()
     assert _rows(out) == sorted(tuple(r) for r in oracle)
     # the gate must actually drop something: contaminated training docs
@@ -935,9 +933,7 @@ def test_winnow_streaming_multibatch_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(flat)
     )
-    out = jobs._run_to_memory(
-        dedup.winnow_fps_from_docs(stream), use_rocksdb=False
-    )
+    out = jobs._run_to_memory(dedup.winnow_fps_from_docs(stream))
     assert _rows(out) == _rows(dedup.q_winnow_fingerprints(spark, SF_DIR))
 
 
@@ -957,61 +953,6 @@ def test_quality_funnel_streaming_equals_batch(spark):
     }
     assert stream == batch
     assert len(stream) > 0
-
-
-def test_es_buffered_flush_policy(tmp_path):
-    """The reference's buffered 500-doc / 5000-ms flush policy
-    (ElasticsearchJestSink.java:61-63,139-148), exercised directly on
-    the single-process sink: count-triggered flush, age-triggered
-    flush, the unconditional commit flush, epoch-redelivery cleanup,
-    and iter_bulk_lines picking the .ndjson files up."""
-    from flink_stream_processing_refarch_spark.streaming.sinks import (
-        EsBulkFileSink,
-        iter_bulk_lines,
-    )
-
-    out = str(tmp_path / "sink")
-    sink = EsBulkFileSink(out, max_docs=2, max_age_ms=10_000)
-    sink.begin_epoch(3)
-    sink.add("t", '{"v": 1}')
-    assert sink.flush_count() == 0  # below both thresholds: buffered
-    sink.add("t", '{"v": 2}')
-    assert sink.flush_count() == 1  # count-triggered at max_docs
-    sink.add("t", '{"v": 3}')
-    sink._oldest_ms -= 20_000  # age the buffer past max_age_ms
-    sink.add("t", '{"v": 4}')
-    assert sink.flush_count() == 2  # age-triggered
-    sink.add("t", '{"v": 5}')
-    sink.flush()  # the epoch-commit (snapshotState) flush drains the rest
-    lines = list(iter_bulk_lines(out))
-    assert len(lines) == 2 * 5  # action + source line per doc
-    assert all(
-        '"index"' in a for a in lines[::2]
-    )  # bulk action lines alternate with docs
-    # epoch REdelivery: begin_epoch removes the partial delivery's files
-    sink.begin_epoch(3)
-    assert list(iter_bulk_lines(out)) == []
-    sink.add("t", '{"v": 9}')
-    sink.flush()
-    assert len(list(iter_bulk_lines(out))) == 2
-
-
-def test_es_adhoc_batches_visible_and_append(spark, tmp_path):
-    """Ad-hoc (epoch-less) write_batch_to_es batches must be visible to
-    the bulk readers and must APPEND across calls, not clobber (review
-    finding r07: the fixed 'bulk-adhoc' dir matched no reader glob and
-    overwrote the previous batch)."""
-    from flink_stream_processing_refarch_spark.streaming.sinks import (
-        EsBulkFileSink,
-        iter_bulk_lines,
-        write_batch_to_es,
-    )
-
-    sink = EsBulkFileSink(str(tmp_path / "sink"))
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    write_batch_to_es(df, sink, "t")
-    write_batch_to_es(df.limit(1), sink, "t")
-    assert sum(1 for _ in iter_bulk_lines(str(tmp_path / "sink"))) // 2 == 3
 
 
 def test_replay_chunk_mtimes_monotone_and_multibatch_correct(spark, tmp_path):

@@ -92,36 +92,15 @@ def build_events(scale: str, replicas: int) -> str:
 
 
 def run_stream(spark, df, output_mode: str):
-    """availableNow -> noop sink; returns (wall, input_rows, progresses)."""
-    import tempfile
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(jobs.STREAM_STATE_PARTITIONS)
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scale_", dir="/dev/shm")
+    """The engine's bounded run (``jobs.run_bounded``) into a noop sink,
+    on the session's state-store provider; returns (wall, input_rows,
+    progresses)."""
     t0 = time.time()
-    try:
-        q = (
-            df.writeStream.format("noop")
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        progs = [p for p in q.recentProgress if p is not None]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
+    (q,) = jobs.run_bounded(
+        spark, [("scale", df.writeStream.format("noop").outputMode(output_mode))]
+    ).values()
+    wall = time.time() - t0
+    progs = [p for p in q.recentProgress if p is not None]
     rows_in = sum(
         int(s.get("numInputRows", 0))
         for p in progs

@@ -15,7 +15,9 @@ time order) with ``maxFilesPerTrigger=1`` — 10 micro-batches, each
 spanning one replica's compressed event-time band, so the watermark
 advances between batches and window state must drain. The plans are
 the registry's own (``clean_trips_from_events`` -> ``taxi.q{1,2}`` —
-the exact composition ``q1_stream_df`` serves), run to a noop sink with RocksDB state, availableNow.
+the exact composition ``q1_stream_df`` serves), run to a noop sink
+through the engine's bounded run (``jobs.run_bounded``: availableNow,
+the session's state-store provider).
 
 Reported per query: median wall of N_RUNS, events/s (n_events / wall),
 micro-batch count, peak state rows across batches (the store's
@@ -130,8 +132,8 @@ def main() -> None:
         " corpus",
         f"({replicas} time-shifted sf0.1 replicas, mtime-ordered), one"
         " replica",
-        "per micro-batch (`maxFilesPerTrigger=1`), RocksDB state,",
-        "availableNow -> noop. Median wall of "
+        "per micro-batch (`maxFilesPerTrigger=1`), the session's",
+        "state-store provider, availableNow -> noop. Median wall of "
         f"{N_RUNS}; batch twin measured on the same corpus in the same",
         "session.",
         "",
